@@ -49,7 +49,6 @@ def launch_env(state_dir: str, repo_root: str, trace: bool) -> str:
         os.makedirs(d, exist_ok=True)
     os.environ.update({
         "SPARK_GRAFT_CPUS": str(CPUS),
-        "SPARK_GRAFT_DRIVER_MEM": "2g",
         "SPARK_GRAFT_WAREHOUSE": os.path.join(state_dir, "warehouse"),
         "SPARK_LOCAL_DIRS": local,
         "TMPDIR": tmp,
@@ -63,10 +62,7 @@ def launch_env(state_dir: str, repo_root: str, trace: bool) -> str:
     # no perf-data file under /tmp
     os.environ["JAVA_TOOL_OPTIONS"] = (f"-Djava.io.tmpdir={tmp} "
                                        "-XX:-UsePerfData")
-    # a pre-touched, fixed-size heap keeps the JVM's share of the RSS from
-    # depending on when the collector chose to grow the heap
-    args = ["--driver-java-options", "-Xms2g -XX:+AlwaysPreTouch",
-            "--conf", f"spark.local.dir={local}"]
+    args = ["--conf", f"spark.local.dir={local}"]
     if trace:
         args += ["--conf", "spark.eventLog.enabled=true",
                  "--conf", "spark.eventLog.compress=false",

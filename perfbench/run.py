@@ -3,7 +3,7 @@
 
 Run from the repository root:
 
-    python3 perfbench/run.py --workload service_import --seed 1 --seconds 16 --trace 0
+    python3 perfbench/run.py --workload service_import --seed 1 --seconds 26 --trace 0
 
 Workloads: service_import (the live delta service beside bulk import
 passes) and corpus_index (incremental BM25/IVF indexes beside batch
@@ -24,13 +24,15 @@ The run:
 
 The exit code is 0 only if every operation succeeded and every check
 passed. All state (Spark local dirs, warehouse, stream and index dirs,
-outputs, temp files) lives under ``.perfbench_state/`` in the working
-directory and is removed at the end.
+outputs, temp files) lives under ``.perfbench_state/<workload>-<pid>/``
+in the working directory and is left there (see the end of ``main``);
+delete ``.perfbench_state/`` between sets of runs.
 """
 
 from __future__ import annotations
 
 import argparse
+import contextlib
 import json
 import os
 import shutil
@@ -90,7 +92,7 @@ def main(argv=None) -> int:
         print(f"perfbench: the program is not here ({e})", file=sys.stderr)
         return 2
     import harness
-    from workloads import WORKLOADS, load
+    from workloads import PASS_EVERY, WORKLOADS, Workload
 
     if args.workload not in WORKLOADS:
         print(f"perfbench: unknown workload {args.workload!r}; one of "
@@ -105,12 +107,15 @@ def main(argv=None) -> int:
     signal.alarm(RUN_DEADLINE_S)
     events = harness.launch_env(state, REPO, bool(args.trace))
     tracer = harness.Tracer(bool(args.trace))
-    wl = load(args.workload, args.seed, state, tracer)
+    wl = Workload(args.workload, args.seed, state, tracer)
     spark = None
     try:
         from harvesting_extract_to_ttl_service_spark import get_spark
 
-        with harness.RssSampler() as rss:
+        # memory is a per-layer metric: sample it only in the traced run,
+        # so the plain run has no extra thread competing for the GIL
+        with (harness.RssSampler() if args.trace
+              else contextlib.nullcontext()) as rss:
             setups = []
             for r in range(SETUP_ROUNDS):
                 if spark is not None:
@@ -124,17 +129,20 @@ def main(argv=None) -> int:
                 _log(f"set-up round {r}: {setups[-1]:.2f} s")
             t0 = time.perf_counter()
             wl.warm_up()
+            # flush what set-up wrote and deleted, so that its write-back
+            # and block discards do not land in the timed phase
+            os.sync()
             warm_s = time.perf_counter() - t0
             _log(f"warm-up: {warm_s:.2f} s")
 
             timed_from_ms = time.time() * 1e3
             lat = {"latency": [], "pass": []}
             lat_traced = {"latency": [], "pass": []}
-            items = items_busy = 0.0
+            schedule = []
             attempted = failed = 0
             for i in range(wl.n_ops(args.seconds, bool(args.trace))):
                 # traced runs alternate plain and traced cycles
-                traced = bool(args.trace) and (i // wl.every) % 2 == 1
+                traced = bool(args.trace) and (i // PASS_EVERY) % 2 == 1
                 timer = _cancel_after(spark, OP_DEADLINE_S)
                 try:
                     op = wl.op(i, traced)
@@ -153,21 +161,21 @@ def main(argv=None) -> int:
                 _log(f"op {i} {op.kind}{' traced' if traced else ''} "
                      + " ".join(f"{t * 1e3:.1f}" for t in op.samples_s)
                      + " ms")
-                items += op.items
-                items_busy += op.wall_s
+                if op.kind == "latency" and not traced:
+                    schedule.append(op.wall_s)
             _log(f"timed phase: {attempted} operations")
             f_attempted, f_failed = wl.final_checks()
             _log("final checks done")
             attempted += f_attempted
             failed += f_failed
-            rows = wl.end_to_end(lat, items, items_busy, setups, warm_s, rss)
+            rows = wl.end_to_end(lat, schedule, setups, warm_s)
             tail = harness.tail(lat["latency"])
             wl.stop_round()
         spark.stop()
         spark = None
         if args.trace:
             rows = wl.per_layer(harness.read_event_log(events, timed_from_ms),
-                                lat, lat_traced)
+                                lat, lat_traced, rss.peak_kb)
             spans = os.path.join(os.getcwd(), ".perfbench_spans")
             os.makedirs(spans, exist_ok=True)
             tracer.dump(os.path.join(
@@ -182,12 +190,13 @@ def main(argv=None) -> int:
             finally:
                 spark.stop()
         harness.stop_jvm()
-        _log("stopped")
-        shutil.rmtree(state, ignore_errors=True)
-        try:
-            os.rmdir(os.path.dirname(state))
-        except OSError:
-            pass  # another run still uses it
+        # The state stays: deleting thousands of small files makes a file
+        # system mounted with online discard trim their blocks, which on a
+        # shared disk takes from a fraction of a second to half a minute
+        # and, left to the kernel, runs into the next run's timed phase.
+        # Flush it instead, so the next run starts on an idle disk.
+        os.sync()
+        _log(f"stopped; state left in {state}")
 
     for name, (value, unit, n) in rows.items():
         print(f"{name:40s} {value:14.4f} {unit:8s} n={n}")

@@ -6,7 +6,9 @@
 ``check(op)``              verify that operation's outputs (not timed)
 ``final_checks()``         end-of-run checks → (attempted, failed)
 ``stop_round()``           release what ``setup_round`` started
-``layers(events, lat)``    the part's per-layer rows (traced run)
+``layers(events)``         the part's per-layer rows (traced run)
+
+(see :mod:`workloads.base`).
 
 ``service_import`` = the live service (delta_service) + bulk passes
 (bulk_import); ``corpus_index`` = the incremental indexes (index_churn) +
@@ -16,127 +18,29 @@ the batch corpus operators (corpus_ops).
 from __future__ import annotations
 
 import os
-from dataclasses import dataclass
-from typing import Any
 
 import harness
+from workloads.base import LAYER_UNITS, Op, Part
+from workloads.bulk_import import BulkImport
+from workloads.corpus_ops import CorpusOps
+from workloads.delta_service import DeltaService
+from workloads.index_churn import IndexChurn
 
-# Every per-layer metric with its unit. A run reports all of them; a layer
-# the workload does not call reads 0.
-LAYER_UNITS = {
-    # service path (delta_service)
-    "delta_stream.post_ms": "ms",
-    "delta_stream.pickup_ms": "ms",
-    "delta_stream.latest_offset_ms": "ms",
-    "delta_stream.wal_commit_ms": "ms",
-    "delta_stream.commit_offsets_ms": "ms",
-    "service.add_batch_ms": "ms",
-    "pipeline_import.jobs_per_batch": "count",
-    "pipeline_import.stages_per_batch": "count",
-    "files.files_per_batch": "count",
-    # import pipeline (bulk_import)
-    "pipeline_import.control_ms": "ms",
-    "pipeline_import.unattributed_ms": "ms",
-    "extract.extract_ms": "ms",
-    "extract.pages": "count",
-    "extract.error_pages": "count",
-    "triage.triage_ms": "ms",
-    "triage.valid": "count",
-    "triage.invalid": "count",
-    "triage.corrected": "count",
-    "triage.dropped": "count",
-    "triage.repair_ratio": "ratio",
-    "files.write_ttl_ms": "ms",
-    "files.files_written": "count",
-    "files.bytes_written": "bytes",
-    "files.partitions": "count",
-    # incremental indexes (index_churn)
-    "lexical_stream.ingest_ms": "ms",
-    "ann_stream.ingest_ms": "ms",
-    "lexical_stream.search_ms": "ms",
-    "ann_stream.search_ms": "ms",
-    "lexical_stream.search_jobs": "count",
-    "lexical_stream.segments": "count",
-    "ann_stream.segments": "count",
-    "lexical_stream.delete_ms": "ms",
-    "ann_stream.delete_ms": "ms",
-    "lexical_stream.compact_ms": "ms",
-    "ann_stream.compact_ms": "ms",
-    "lexical_stream.index_files": "count",
-    "ann_stream.index_files": "count",
-    # batch operators (corpus_ops)
-    **{f"{op}.{part}": unit
-       for op in ("dedup.exact", "dedup.minhash", "dedup.simhash",
-                  "similarity.cosine_topk", "text.stats")
-       for part, unit in (("build_ms", "ms"), ("execute_ms", "ms"),
-                          ("jobs", "count"))},
-    # every workload: Spark totals per operation, tracing overhead
-    "spark.tasks": "count",
-    "spark.shuffle_write_bytes": "bytes",
-    "spark.spill_bytes": "bytes",
-    "spark.gc_ms": "ms",
-    "trace.overhead_pct": "%",
-}
+__all__ = ["LAYER_UNITS", "PASS_EVERY", "WORKLOADS", "Workload"]
 
-
-@dataclass
-class Op:
-    """One step of the closed loop: its latency samples (one per request
-    it made), the items it completed, what ``check`` needs, and its wall
-    time if the step did more than the timed requests (``items_per_s``
-    divides by it)."""
-
-    samples_s: list[float]
-    items: int
-    data: Any = None
-    busy_s: float | None = None
-    kind: str = ""
-
-    @property
-    def wall_s(self) -> float:
-        return sum(self.samples_s) if self.busy_s is None else self.busy_s
-
-
-class Part:
-    """One half of a workload (e.g. the live service, or the bulk passes).
-    Subclasses implement ``setup_round``, ``op`` and ``check`` and may
-    override the rest."""
-
-    name = ""
-
-    def __init__(self, seed: int, state: str, tracer: harness.Tracer):
-        self.seed = seed
-        self.state = os.path.join(state, self.name)
-        self.tracer = tracer
-        self.spark = None
-
-    def stop_round(self) -> None:
-        pass
-
-    def warm_up(self) -> None:
-        pass
-
-    def final_checks(self) -> tuple[int, int]:
-        return 0, 0
-
-    def layers(self, events: dict, lat_ms: list[float]) -> dict:
-        """This part's per-layer rows ``name → (value, samples)``;
-        ``lat_ms`` are its plain operations' latencies."""
-        return {}
-
+# every PASS_EVERY-th step runs the secondary part's operation (a batch
+# pass), the others the primary part's (the interactive operation)
+PASS_EVERY = 2
 
 class Workload:
-    """A closed loop over two parts: SECONDARY_EVERY-th steps run the
-    secondary part's operation (a batch pass), the others the primary
-    part's (the interactive operation). Every round sets up both on the
-    same Spark session."""
+    """A closed loop over two parts: every PASS_EVERY-th step runs the
+    secondary part's operation, the others the primary part's. Every round
+    sets up both on the same Spark session."""
 
-    def __init__(self, name: str, primary: type[Part], secondary: type[Part],
-                 every: int, cycle_s: float, seed: int, state: str,
+    def __init__(self, name: str, seed: int, state: str,
                  tracer: harness.Tracer):
+        primary, secondary, self.cycle_s = WORKLOADS[name]
         self.name = name
-        self.every = every
-        self.cycle_s = cycle_s
         self.parts = {"latency": primary(seed, state, tracer),
                       "pass": secondary(seed, state, tracer)}
 
@@ -151,14 +55,14 @@ class Workload:
 
     def n_ops(self, seconds: float, trace: bool) -> int:
         """The fixed schedule length for ``seconds``: whole cycles of
-        ``every`` steps, as many as take about ``seconds`` on 4 cores. A
+        PASS_EVERY steps, as many as take about ``seconds`` on 4 cores. A
         fixed count, not a deadline, so every run sees the same sequence
         of index and service states whatever its speed."""
         cycles = max(2 if trace else 1, round(seconds / self.cycle_s))
-        return cycles * self.every
+        return cycles * PASS_EVERY
 
     def op(self, i: int, traced: bool) -> Op:
-        kind = "pass" if i % self.every == self.every - 1 else "latency"
+        kind = "pass" if i % PASS_EVERY == PASS_EVERY - 1 else "latency"
         op = self.parts[kind].op(i, traced)
         op.kind = kind
         return op
@@ -177,27 +81,29 @@ class Workload:
         for p in self.parts.values():
             p.stop_round()
 
-    def end_to_end(self, lat, items, busy_s, setups, warm_s, rss) -> dict:
+    @staticmethod
+    def end_to_end(lat, schedule, setups, warm_s) -> dict:
         """Rows ``name → (value, unit, samples)``: the same names on every
         workload, so BENCHMARK.json lists one set. ``lat`` maps each kind
-        to its plain operations' latencies (ms). ``setup_s`` is the median
-        set-up round plus the warm-up that follows the last one."""
+        to its operations' latencies (ms) and ``schedule`` holds the
+        primary part's operations' wall times (s). ``setup_s`` is the
+        median set-up round plus the warm-up that follows the last one."""
         return {
             "setup_s": (harness.median(setups) + warm_s, "s", len(setups)),
             "latency_p50_ms": (harness.median(lat["latency"]), "ms",
                                len(lat["latency"])),
             "pass_p50_ms": (harness.median(lat["pass"]), "ms",
                             len(lat["pass"])),
-            "items_per_s": (items / busy_s, "1/s",
-                            len(lat["latency"]) + len(lat["pass"])),
-            "peak_rss_mb": (rss.peak_kb / 1024, "MB", 1),
+            "schedule_s": (sum(schedule), "s", len(schedule)),
         }
 
-    def per_layer(self, events, lat, lat_traced) -> dict:
+    def per_layer(self, events, lat, lat_traced, rss_kb) -> dict:
         """Every per-layer row: each part's own, Spark totals per operation
-        from the event log, and the tracing overhead (the traced
-        operations' medians against the plain ones', summed over both
-        kinds)."""
+        from the event log, the peak resident memory of the driver process
+        tree over the whole run, and the tracing overhead: the traced primary
+        operations' median latency against the plain ones'. Only the
+        primary operation counts there, because the traced bulk pass is
+        composed differently from the plain one (see bulk_import)."""
         n_ops = max(sum(map(len, lat.values()))
                     + sum(map(len, lat_traced.values())), 1)
         tot = {k: sum(getattr(g, k) for g in events.values())
@@ -206,34 +112,20 @@ class Workload:
         rows = {k: (0.0, u, 0) for k, u in LAYER_UNITS.items()}
         for k, v in tot.items():
             rows[f"spark.{k}"] = (v / n_ops, LAYER_UNITS[f"spark.{k}"], n_ops)
-        plain = sum(harness.median(v) for v in lat.values())
-        traced = sum(harness.median(v) for v in lat_traced.values())
+        rows["session.peak_rss_mb"] = (rss_kb / 1024, "MB", 1)
+        plain = harness.median(lat["latency"])
+        traced = harness.median(lat_traced["latency"])
         rows["trace.overhead_pct"] = ((traced / plain - 1) * 100, "%",
-                                      sum(map(len, lat_traced.values())))
-        for kind, part in self.parts.items():
-            for k, (v, n) in part.layers(events, lat[kind]).items():
+                                      len(lat_traced["latency"]))
+        for part in self.parts.values():
+            for k, (v, n) in part.layers(events).items():
                 rows[k] = (v, LAYER_UNITS[k], n)
         return rows
 
 
-# workload name → (primary part, secondary part, secondary every n-th
-# step, seconds one cycle of ``every`` steps takes on 4 cores)
-WORKLOADS = {
-    "service_import": ("workloads.delta_service:DeltaService",
-                       "workloads.bulk_import:BulkImport", 2, 2.6),
-    "corpus_index": ("workloads.index_churn:IndexChurn",
-                     "workloads.corpus_ops:CorpusOps", 2, 4.5),
+# workload name → (primary part, secondary part, seconds one cycle of
+# PASS_EVERY steps takes on 4 cores)
+WORKLOADS: dict[str, tuple[type[Part], type[Part], float]] = {
+    "service_import": (DeltaService, BulkImport, 2.4),
+    "corpus_index": (IndexChurn, CorpusOps, 7.0),
 }
-
-
-def load(name: str, seed: int, state: str, tracer: harness.Tracer
-         ) -> Workload:
-    import importlib
-
-    def cls(ref: str) -> type[Part]:
-        module, attr = ref.split(":")
-        return getattr(importlib.import_module(module), attr)
-
-    primary, secondary, every, cycle_s = WORKLOADS[name]
-    return Workload(name, cls(primary), cls(secondary), every, cycle_s, seed,
-                    state, tracer)

@@ -23,7 +23,7 @@ import time
 
 import gen
 import harness
-from workloads import Op, Part
+from workloads.base import Op, Part
 
 N_DOCS = 500
 N_VECS = 300
@@ -144,7 +144,7 @@ class CorpusOps(Part):
             self.layer_ms.setdefault(f"{prefix}.execute_ms", []).append(
                 (t2 - t1) * 1e3)
             out[name] = (df.columns, rows)
-        return Op([time.perf_counter() - t0], N_DOCS, out)
+        return Op([time.perf_counter() - t0], out)
 
     def check(self, op: Op) -> bool:
         ok = True
@@ -155,7 +155,7 @@ class CorpusOps(Part):
             ok &= got == self.want[name]
         return ok
 
-    def layers(self, events: dict, lat_ms: list[float]) -> dict:
+    def layers(self, events: dict) -> dict:
         rows = {k: (harness.median(v), len(v))
                 for k, v in self.layer_ms.items()}
         for prefix in OPS.values():

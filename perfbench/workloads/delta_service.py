@@ -1,6 +1,6 @@
 """delta_service: the live service, driven over HTTP.
 
-``service.run_service`` runs with a live (processing-time) trigger. One
+``service.run_service`` runs with a live (default micro-batch) trigger. One
 client POSTs ``/delta`` bodies over one HTTP connection; each body holds
 unrelated inserts and deletes plus one scheduled-task insert, whose task
 owns a small, seeded number of pages. The client waits, through
@@ -24,12 +24,15 @@ import time
 
 import gen
 import harness
-from workloads import Op, Part
+from workloads.base import Op, Part
 from workloads.bulk_import import read_ttl_tree
 
-PAGES_PER_TASK = (8, 12, 16, 20, 24)  # each size equally often per seed
+# task sizes come in blocks, each a seeded order of PAGES_PER_TASK; the
+# warm-up uses the first block and the timed deltas start with the second,
+# so every whole block of timed deltas has the same sizes on every seed
+PAGES_PER_TASK = (8, 12, 16, 20, 24)
 N_TASKS = 60  # more than one run can schedule
-WARMUP_OPS = 1
+WARMUP_OPS = 3
 BATCH_DEADLINE_S = 30.0
 
 
@@ -71,6 +74,7 @@ class DeltaService(Part):
         for i in range(WARMUP_OPS):
             if not self.check(self.op(-1 - i, False)):
                 raise RuntimeError("warm-up delta produced wrong output")
+        self.next_task = len(PAGES_PER_TASK)
 
     def _on_batch(self, _res, batch_id: int) -> None:
         with self.batch_done:
@@ -103,7 +107,7 @@ class DeltaService(Part):
                 self.batch_done.wait(min(left, 0.5))
             batch_id, done = self.batches[seen]
         self.op_batch[i] = batch_id
-        return Op([done - t0], len(self.ps.tasks[task]), task)
+        return Op([done - t0], task)
 
     def check(self, op: Op) -> bool:
         got = read_ttl_tree(f"{self.out}/valid")
@@ -117,7 +121,7 @@ class DeltaService(Part):
             h.stop()
             self.handle = None
 
-    def layers(self, events: dict, lat_ms: list[float]) -> dict:
+    def layers(self, events: dict) -> dict:
         by_batch = {p["batchId"]: p for p in self.progress}
         cols = {"delta_stream.latest_offset_ms": "latestOffset",
                 "delta_stream.wal_commit_ms": "walCommit",

@@ -2,12 +2,13 @@
 
 Documents and their embeddings go into ``streaming.lexical_stream`` (BM25)
 and ``streaming.ann_stream`` (IVF) in fixed-size batches. The schedule is
-fixed by the step number (see the constants): appends, deletes and minor
-compactions at fixed steps, and every step answers QUERIES queries from
-both indexes. One latency sample = one query answered by BM25 and by
-IVF. Writes sit beside reads, so a change that speeds one side and slows
-the other shows: the queries in ``latency_p50_ms``, the whole schedule
-(appends, deletes, compactions) in ``items_per_s``.
+fixed by the step number (see the constants): every step appends one
+batch to both indexes, deletes and minor compactions come at fixed steps,
+and then the step answers QUERIES queries from both indexes. One latency
+sample = one query answered by BM25 and by IVF. Writes sit beside reads,
+so a change that speeds one side and slows the other shows: the queries
+in ``latency_p50_ms``, the whole schedule (appends, deletes, compactions,
+queries) in ``schedule_s``.
 """
 
 from __future__ import annotations
@@ -20,7 +21,7 @@ import time
 
 import gen
 import harness
-from workloads import Op, Part
+from workloads.base import Op, Part
 
 DIM = 32
 N_CELLS = 8
@@ -29,16 +30,14 @@ N_BUCKETS = 8
 K = 10
 INITIAL_BATCHES = 1
 BATCH = 100
-QUERIES = 2  # per step
-# the schedule, by step: append every APPEND_EVERY steps; in each CYCLE of
-# steps, delete at DELETE_AT and compact (minor fold) at COMPACT_AT
-APPEND_EVERY = 2
-CYCLE = 4
+QUERIES = 3  # per step
+# the schedule, by step: append every step; in each CYCLE of steps, compact
+# (minor fold) after the append at COMPACT_AT and delete at DELETE_AT
+CYCLE = 2
+COMPACT_AT = 0
 DELETE_AT = 1
-COMPACT_AT = 3
 DELETES = 8  # documents per delete
 MAX_BATCHES = 40  # more than one run appends
-WARMUP_OPS = 1
 PARITY_QUERIES = 2
 
 
@@ -69,10 +68,15 @@ class IndexChurn(Part):
         self.step = 0
 
     def warm_up(self) -> None:
-        for i in range(WARMUP_OPS):
-            if not self.check(self.op(-1 - i, False)):
+        """One step that runs every kind of call the schedule makes: an
+        append, a delete, a compaction and the queries."""
+        self._append(None)
+        self._delete(None)
+        self._compact(None)
+        for j in range(QUERIES):
+            lex, ann, _q = self._search(-1 - j, None)
+            if {r[0] for r in lex + ann} & self.deleted:
                 raise RuntimeError("warm-up search returned a deleted id")
-        self.step = 0
         self.layer_ms = {}
 
     def _doc_df(self, ids):
@@ -165,16 +169,13 @@ class IndexChurn(Part):
         return lex, ann, qvec
 
     def op(self, i: int, traced: bool) -> Op:
-        """Step ``k`` of the schedule: the maintenance due at ``k``, then
-        QUERIES queries, each timed as one latency sample."""
+        """Step ``k`` of the schedule: an append, the maintenance due at
+        ``k``, then QUERIES queries, each timed as one latency sample."""
         op = i if traced else None
         k = self.step
         self.step += 1
         t0 = time.perf_counter()
-        appended = 0
-        if k % APPEND_EVERY == 0:
-            self._append(op)
-            appended = BATCH
+        self._append(op)
         if k % CYCLE == DELETE_AT:
             self._delete(op)
         if k % CYCLE == COMPACT_AT:
@@ -185,8 +186,7 @@ class IndexChurn(Part):
             lex, ann, _q = self._search(k * QUERIES + j, op)
             samples.append(time.perf_counter() - t)
             found.append((lex, ann))
-        return Op(samples, appended, found,
-                  busy_s=time.perf_counter() - t0)
+        return Op(samples, found, busy_s=time.perf_counter() - t0)
 
     def check(self, op: Op) -> bool:
         ids = {r[0] for lex, ann in op.data for r in lex + ann}
@@ -229,7 +229,7 @@ class IndexChurn(Part):
                 "lexical_stream.index_files": harness.dir_stats(self.bm25)[0],
                 "ann_stream.index_files": harness.dir_stats(self.ivf)[0]}
 
-    def layers(self, events: dict, lat_ms: list[float]) -> dict:
+    def layers(self, events: dict) -> dict:
         rows = {f"{k}_ms": (harness.median(v), len(v))
                 for k, v in self.layer_ms.items()}
         rows.update({k: (v, 1) for k, v in self.stats.items()})
